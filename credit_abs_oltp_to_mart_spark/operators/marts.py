@@ -26,8 +26,11 @@ Scale design (100 TB posture, SURVEY.md §4):
 - The loan dimension is tiny relative to the snapshot fact (1.5k vs O(1e6)
   rows at reference scale; same ratio at 100 TB) — joins J1-J3 are
   broadcast-pinned with ``F.broadcast``.
-- Monthly marts should be written partitioned by ``month`` (see
-  sources/writers.py) so downstream reads partition-prune.
+- ``MARTS`` at the end of this module describes each mart once: its
+  function and inputs, its partition column, and the source months one
+  refreshed partition reads. The full build (plans/pipeline.py), the
+  writer (sources/writers.py) and the month refresh (plans/incremental.py)
+  all read it.
 
 Numeric note: Postgres unconstrained ``numeric`` ratios are computed here in
 ``double`` from exact integer/decimal inputs — IEEE division is deterministic
@@ -36,7 +39,13 @@ and engine-portable, while decimal division scale rules differ per engine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import datetime as dt
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
+from operator import or_
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from credit_abs_oltp_to_mart_spark.functions.dates import (
@@ -257,3 +266,94 @@ def fct_writeoff_recovery_monthly(stg_writeoff_recovery: DataFrame) -> DataFrame
         ).alias("writeoff_total"),
         F.sum(F.coalesce(F.col("recovery_amount"), z)).alias("recovery_total"),
     )
+
+
+# A (cohort_q, mob) cell draws the snapshot months cohort_q+mob ..
+# cohort_q+mob+3: its loans originate over the three months of the quarter,
+# and ``months_on_book`` floors, so a loan originated after the 1st of its
+# month reaches each mob one month later than one originated on the 1st.
+VINTAGE_CELL_MONTHS = 3
+
+
+def vintage_cells_drawing_on(months: list[dt.date]) -> Column:
+    """The (cohort_q, mob) cells whose snapshot months include one of
+    ``months`` (month starts)."""
+    first = F.add_months("cohort_q", F.col("mob"))
+    last = F.add_months(first, VINTAGE_CELL_MONTHS)
+    return reduce(or_, [F.lit(m).between(first, last) for m in months])
+
+
+@dataclass(frozen=True)
+class MartSpec:
+    """How one mart is built, laid out and refreshed.
+
+    - ``build`` is its function above, called with the frames named in
+      ``inputs``: staging models, the shared ``int_*`` intermediates, or a
+      mart listed before it.
+    - ``key`` is the partition column of the written mart. ``key_of`` names
+      the date column whose month it is, when the mart has no such column.
+    - ``source`` is the OLTP table whose months the mart's rows come from;
+      ``window`` is how many months of it before and after a refreshed
+      month the refreshed rows read.
+    - ``merge`` is set when one partition mixes source months. It selects
+      the grain cells that draw on given months; a refresh rewrites those
+      and keeps the partition's other cells as written.
+    """
+
+    build: Callable[..., DataFrame]
+    inputs: tuple[str, ...]
+    key: str
+    source: str
+    window: tuple[int, int] = (0, 0)
+    key_of: str | None = None
+    merge: Callable[[list[dt.date]], Column] | None = None
+
+    def keyed(self, df: DataFrame) -> DataFrame:
+        """``df`` with its partition column."""
+        return df.withColumn(self.key, month_start(self.key_of)) if self.key_of else df
+
+    def owned(self, months: list[dt.date]) -> Column:
+        """The rows a refresh of ``months`` (month starts) rewrites: those
+        months' partitions, or the cells that draw on them."""
+        if self.merge:
+            return self.merge(months)
+        return (month_start(self.key_of) if self.key_of else F.col(self.key)).isin(months)
+
+
+_ARREARS = "arrears_dpd_status"
+MARTS: dict[str, MartSpec] = {
+    # row-wise over arrears x loans
+    "fct_dpd_daily": MartSpec(
+        fct_dpd_daily, ("stg_arrears_daily", "stg_loan_contract"),
+        key="as_of_month", key_of="as_of_date", source=_ARREARS,
+    ),
+    "fct_npl_monthly": MartSpec(
+        fct_npl_monthly, ("fct_dpd_daily",), key="month", source=_ARREARS,
+    ),
+    # month M pairs each loan's month-end bucket with its previous observed
+    # month's: M-1 in a gap-free daily feed
+    "fct_roll_rate_monthly": MartSpec(
+        fct_roll_rate_monthly, ("int_bucket_transitions",),
+        key="month", source=_ARREARS, window=(1, 0),
+    ),
+    "fct_cure_rate_monthly": MartSpec(
+        fct_cure_rate_monthly, ("int_bucket_transitions",),
+        key="month", source=_ARREARS, window=(1, 0),
+    ),
+    # every cell that draws on month M draws only on M-3 .. M+3
+    "fct_vintage_mob": MartSpec(
+        fct_vintage_mob, ("int_month_end_snapshot", "stg_loan_contract"),
+        key="cohort_q", source=_ARREARS,
+        window=(VINTAGE_CELL_MONTHS, VINTAGE_CELL_MONTHS),
+        merge=vintage_cells_drawing_on,
+    ),
+    "fct_collections_monthly": MartSpec(
+        fct_collections_monthly, ("stg_payments", "stg_loan_contract"),
+        key="month", source="repayment_payment",
+    ),
+    # a row's month is that of coalesce(recovery_date, writeoff_date)
+    "fct_writeoff_recovery_monthly": MartSpec(
+        fct_writeoff_recovery_monthly, ("stg_writeoff_recovery",),
+        key="month", source="write_off_and_recovery",
+    ),
+}

@@ -3,62 +3,69 @@
 The reference rebuilds every mart with `dbt run` full-refresh (no
 `is_incremental()` anywhere). That is fine at 1,500 loans and fatal at
 100 TB: one new day of `arrears_dpd_status` would recompute years of
-history. This module adds the lakehouse-standard alternative for the
-month-grained marts:
+history. ``refresh_month`` is the lakehouse-standard alternative:
 
-1. read ONLY the source months that changed (partition pruning does this
-   when the lake is month-partitioned; here a predicate does),
-2. recompute just those months' mart rows,
-3. replace just those output partitions via dynamic partition overwrite
-   (`spark.sql.sources.partitionOverwriteMode=dynamic`) — untouched months
-   keep their files.
+1. stage each source ONCE, reading only the source months the refreshed
+   marts need (row-group pruning through pushed date ranges);
+2. build the marts from them with the same ``build_marts`` — the same
+   ``operators.marts`` functions — as the full build;
+3. keep only the rows the refreshed months own, and replace just those
+   output partitions via dynamic partition overwrite
+   (`spark.sql.sources.partitionOverwriteMode=dynamic`) — untouched
+   partitions keep their files.
 
-Correctness boundary — which marts can refresh month-by-month:
+Correctness boundary: each mart's ``window`` in ``operators.marts.MARTS``,
+the source months around a refreshed month M that M's rows read.
 
-- `fct_npl_monthly`, `fct_collections_monthly`,
-  `fct_writeoff_recovery_monthly`: month rows depend only on same-month
-  source rows -> safe.
-- `fct_dpd_daily`: row-wise -> safe (by as_of_date month).
-- `fct_roll_rate_monthly` / `fct_cure_rate_monthly`: month M compares
-  against the PREVIOUS OBSERVED month's snapshot, so refreshing M needs
-  source months <= M; with append-only daily feeds (months arrive in
-  order) recomputing the latest month from (M-1, M) is exact for loans
-  observed in M-1, and the module widens the lookback window for gaps.
-- `fct_vintage_mob`: NOT naively month-safe — cohorts are QUARTERS, so a
-  (cohort_q, mob) cell mixes up to three snapshot months. The refresh
-  recomputes exactly the cells month M touches from a +-2-month snapshot
-  window and key-merges them into the affected cohort partitions
-  (see `refresh_vintage_mob`).
+- `fct_dpd_daily`, `fct_npl_monthly`, `fct_collections_monthly`: (0, 0),
+  month rows depend only on same-month source rows.
+- `fct_writeoff_recovery_monthly`: (0, 0) over month(coalesce(
+  recovery_date, writeoff_date)). A coalesce cannot reach the parquet
+  reader, so the scan reads the pushable superset: either raw date in M.
+- `fct_roll_rate_monthly` / `fct_cure_rate_monthly`: (1, 0), month M
+  compares against the PREVIOUS OBSERVED month's snapshot, M-1 in a
+  gap-free daily feed. A loan with an observation gap longer than the
+  window pairs with nothing instead of its last observed month.
+- `fct_vintage_mob`: (3, 3). Cohorts are QUARTERS, so one cohort_q
+  partition mixes many snapshot months, and a refresh replaces only the
+  (cohort_q, mob) cells that draw on M, keeping the partition's other
+  cells as written. A cell draws months cohort_q+mob .. cohort_q+mob+3:
+  loans originated in the quarter's three months reach mob k in months
+  cohort_q+k .. cohort_q+k+2, and ``months_on_book`` floors, so one
+  originated after the 1st reaches it a month later still. A cell that
+  draws on M therefore starts no earlier than M-3 and ends no later than
+  M+3.
+
+Same append-only boundary throughout: source rows of an unrefreshed month
+that change leave their marts stale until a full rebuild.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from credit_abs_oltp_to_mart_spark.operators import marts as M
-from credit_abs_oltp_to_mart_spark.operators import staging as S
+from credit_abs_oltp_to_mart_spark.operators.marts import MARTS
+from credit_abs_oltp_to_mart_spark.plans.pipeline import (
+    build_marts,
+    build_staging,
+    release,
+)
 from credit_abs_oltp_to_mart_spark.sources.readers import read_oltp_table
+from credit_abs_oltp_to_mart_spark.sources.writers import write_mart
 
+# the date columns through which a month window reaches each source's scan
+_SOURCE_DATES = {
+    "arrears_dpd_status": ("as_of_date",),
+    "repayment_payment": ("payment_date",),
+    "write_off_and_recovery": ("recovery_date", "writeoff_date"),
+}
 
-def _month_filter(col: str, months: list[dt.date]):
-    """OR of per-month DATE RANGES, not trunc(col).isin(...): a predicate
-    on a FUNCTION of the column cannot reach the parquet reader, so the
-    isin form scans every row group of a 100 TB arrears table just to
-    refresh one month. Plain range comparisons push down
-    (``PushedFilters: [GreaterThanOrEqual(as_of_date,...), LessThan(...)]``,
-    plan-gated in test_plan_quality) and row-group min/max stats prune
-    the scan to the refreshed months."""
-    pred = None
-    for m in months:
-        lo = m.replace(day=1)
-        clause = (F.col(col) >= F.lit(lo)) & (
-            F.col(col) < F.lit(_shift_month(lo, 1))
-        )
-        pred = clause if pred is None else pred | clause
-    return pred if pred is not None else F.lit(False)
+_CACHED = ("stg_arrears_daily", "stg_loan_contract")
 
 
 def _shift_month(m: dt.date, delta: int) -> dt.date:
@@ -67,386 +74,132 @@ def _shift_month(m: dt.date, delta: int) -> dt.date:
     return dt.date(y, mo + 1, 1)
 
 
-def _dynamic_overwrite(
-    spark: SparkSession, df: DataFrame, out_dir: str, name: str,
-    keys: list[str],
-) -> None:
-    """Replace exactly the partitions present in ``df`` (dynamic
-    partition overwrite); untouched partitions keep their files."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*keys).parquet(
-            f"{out_dir.rstrip('/')}/{name}.parquet"
+def _month_filter(col: str, months):
+    """Rows whose ``col`` falls in one of ``months``, as plain DATE
+    RANGES, not trunc(col).isin(...): a predicate on a FUNCTION of the
+    column cannot reach the parquet reader, so the isin form scans every
+    row group of a 100 TB arrears table just to refresh one month. Range
+    comparisons push down (``PushedFilters:
+    [GreaterThanOrEqual(as_of_date,...), LessThan(...)]``, plan-gated in
+    test_plan_quality) and row-group min/max stats prune the scan to those
+    months."""
+    return reduce(or_, [
+        (F.col(col) >= F.lit(lo)) & (F.col(col) < F.lit(_shift_month(lo, 1)))
+        for lo in sorted({m.replace(day=1) for m in months})
+    ])
+
+
+def _stage(
+    spark: SparkSession, src_dir: str, months: list[dt.date],
+    names: tuple[str, ...],
+) -> dict[str, DataFrame]:
+    """The staging models, each source read once over the union of the
+    windows the marts ``names`` need around ``months``. The arrears and
+    the loans, which most marts read, are cached; the other two feed one
+    mart each, and materializing a cache costs a Spark job of its own."""
+    need = {table: set(months) for table in _SOURCE_DATES}
+    for name in names:
+        back, ahead = MARTS[name].window
+        need[MARTS[name].source] |= {
+            _shift_month(m, d) for m in months for d in range(-back, ahead + 1)
+        }
+    sources = {
+        table: read_oltp_table(spark, src_dir, table).where(
+            reduce(or_, [_month_filter(c, need[table]) for c in cols])
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        for table, cols in _SOURCE_DATES.items()
+    }
+    sources["loan_contract"] = read_oltp_table(spark, src_dir, "loan_contract")
+    staged = build_staging(sources)
+    for name in _CACHED:
+        staged[name] = staged[name].cache()
+    return staged
 
 
-def refresh_npl_monthly(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    _arrears: DataFrame | None = None,
-    _loans: DataFrame | None = None,
-) -> DataFrame:
-    """Recompute fct_npl_monthly for ``months`` only and overwrite exactly
-    those output partitions. Returns the refreshed slice.
-
-    ``_arrears``/``_loans``: pre-staged inputs (the arrears slice already
-    filtered to ``months``) — ``refresh_month`` passes them so the seven
-    refreshers share ONE scan of the dominant table instead of five."""
-    arrears = _arrears if _arrears is not None else S.stg_arrears_daily(
-        read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-            _month_filter("as_of_date", months)
-        )
-    )
-    loans = _loans if _loans is not None else S.stg_loan_contract(
-        read_oltp_table(spark, src_dir, "loan_contract")
-    )
-    fresh = M.fct_npl_monthly(M.fct_dpd_daily(arrears, loans))
-    _dynamic_overwrite(spark, fresh, out_dir, "fct_npl_monthly", ["month"])
-    return fresh
-
-
-def refresh_roll_rate_monthly(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    lookback_months: int = 1,
-    _transitions: DataFrame | None = None,
-) -> DataFrame:
-    """Recompute fct_roll_rate_monthly for ``months`` with a lookback
-    window supplying each loan's previous observed month-end snapshot.
-
-    ``lookback_months`` must cover the largest per-loan observation gap
-    (1 for gap-free daily feeds); widen it rather than re-reading history.
-    Only the target months' partitions are overwritten. ``_transitions``:
-    a pre-computed ``int_bucket_transitions`` over a window at least this
-    wide (``refresh_month`` shares one across roll + cure)."""
-    if _transitions is not None:
-        transitions = _transitions
-    else:
-        lo = min(months).replace(day=1)
-        window_start = _shift_month(lo, -lookback_months)
-        arrears = S.stg_arrears_daily(
-            read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-                F.col("as_of_date") >= F.lit(window_start)
-            )
-        )
-        transitions = M.int_bucket_transitions(
-            M.int_month_end_snapshot(arrears)
-        )
-    fresh = M.fct_roll_rate_monthly(transitions).where(
-        F.col("month").isin([m.replace(day=1) for m in months])
-    )
-    _dynamic_overwrite(
-        spark, fresh, out_dir, "fct_roll_rate_monthly", ["month"]
-    )
-    return fresh
-
-
-def refresh_cure_rate_monthly(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    lookback_months: int = 1,
-    _transitions: DataFrame | None = None,
-) -> DataFrame:
-    """fct_cure_rate_monthly shares fct_roll_rate_monthly's refresh shape
-    exactly (both aggregate the same int_bucket_transitions lag, so month
-    M needs the previous observed month-end snapshot): same lookback
-    window, cure aggregation instead of transition counts."""
-    if _transitions is not None:
-        transitions = _transitions
-    else:
-        lo = min(months).replace(day=1)
-        window_start = _shift_month(lo, -lookback_months)
-        arrears = S.stg_arrears_daily(
-            read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-                F.col("as_of_date") >= F.lit(window_start)
-            )
-        )
-        transitions = M.int_bucket_transitions(
-            M.int_month_end_snapshot(arrears)
-        )
-    fresh = M.fct_cure_rate_monthly(transitions).where(
-        F.col("month").isin([m.replace(day=1) for m in months])
-    )
-    _dynamic_overwrite(
-        spark, fresh, out_dir, "fct_cure_rate_monthly", ["month"]
-    )
-    return fresh
-
-
-def refresh_dpd_daily(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    _arrears: DataFrame | None = None,
-    _loans: DataFrame | None = None,
-) -> DataFrame:
-    """fct_dpd_daily is row-wise over arrears x loans, so a month's rows
-    derive only from that month's source rows. The derived ``as_of_month``
-    partition key mirrors ``write_mart``'s layout so the overwrite
-    replaces exactly the refreshed month directories."""
-    arrears = _arrears if _arrears is not None else S.stg_arrears_daily(
-        read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-            _month_filter("as_of_date", months)
-        )
-    )
-    loans = _loans if _loans is not None else S.stg_loan_contract(
-        read_oltp_table(spark, src_dir, "loan_contract")
-    )
-    fresh = M.fct_dpd_daily(arrears, loans).withColumn(
-        "as_of_month", F.trunc("as_of_date", "month")
-    )
-    _dynamic_overwrite(spark, fresh, out_dir, "fct_dpd_daily", ["as_of_month"])
-    return fresh
-
-
-def refresh_collections_monthly(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    _loans: DataFrame | None = None,
-) -> DataFrame:
-    """Month rows depend only on same-month payments -> safe month-wise."""
-    payments = S.stg_payments(
-        read_oltp_table(spark, src_dir, "repayment_payment").where(
-            _month_filter("payment_date", months)
-        )
-    )
-    loans = _loans if _loans is not None else S.stg_loan_contract(
-        read_oltp_table(spark, src_dir, "loan_contract")
-    )
-    fresh = M.fct_collections_monthly(payments, loans)
-    _dynamic_overwrite(
-        spark, fresh, out_dir, "fct_collections_monthly", ["month"]
-    )
-    return fresh
-
-
-def refresh_writeoff_recovery_monthly(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
+def _merge_written(
+    spark: SparkSession, fresh: DataFrame, out_dir: str, name: str,
     months: list[dt.date],
 ) -> DataFrame:
-    """The mart groups by month(coalesce(recovery_date, writeoff_date)) —
-    the refresh filter applies the same coalesce so a row lands in the
-    month the AGGREGATION will put it in, not its writeoff month. A
-    coalesce predicate cannot reach the parquet reader, so a pushable
-    SUPERSET filter (either raw date column in range) prunes row groups
-    first; the exact coalesce filter then narrows in-memory."""
-    superset = _month_filter("recovery_date", months) | _month_filter(
-        "writeoff_date", months
-    )
-    wr = S.stg_writeoff_recovery(
-        read_oltp_table(spark, src_dir, "write_off_and_recovery").where(
-            superset
-        )
-    ).where(
-        F.trunc(F.coalesce("recovery_date", "writeoff_date"), "month").isin(
-            [m.replace(day=1) for m in months]
-        )
-    )
-    fresh = M.fct_writeoff_recovery_monthly(wr)
-    _dynamic_overwrite(
-        spark, fresh, out_dir, "fct_writeoff_recovery_monthly", ["month"]
-    )
-    return fresh
-
-
-def refresh_vintage_mob(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    _snap: DataFrame | None = None,
-    _loans: DataFrame | None = None,
-) -> DataFrame:
-    """Month-wise refresh of the cohort-partitioned vintage mart.
-
-    fct_vintage_mob's grain is (cohort_q, mob) with QUARTER cohorts, so a
-    single (cohort, mob) cell mixes up to three snapshot months (a 2024Q1
-    cohort reaches mob 3 in April for its January originations, May for
-    February, June for March). A month-M refresh therefore cannot just
-    recompute "month M's rows"; it must
-
-    1. find the cells month M contributes to (keys from M's month-end
-       snapshots),
-    2. RECOMPUTE those cells exactly from the +-2-month snapshot window
-       around ``months`` (the widest span a quarter cohort needs — for an
-       affected cell (c, mob), every contributing snapshot month lies in
-       [M-2, M+2] for some refreshed M),
-    3. merge: affected cohorts' untouched cells keep their mart rows,
-       affected keys take the recomputed values, and dynamic partition
-       overwrite rewrites only the affected ``cohort_q`` directories.
-
-    The expensive side (the arrears scan) stays bounded to a 5-month
-    window; the merge reads only the aggregated mart (cohort-pruned).
-    Same append-only boundary as the roll-rate lookback: rows deleted
-    from the source everywhere leave a stale cell (full rebuild handles
-    corrections that deep)."""
-    lo = min(months).replace(day=1)
-    hi = max(months).replace(day=1)
-    if _snap is not None:
-        # pre-computed month-end snapshot covering at least
-        # [lo-2, hi+2] — refresh_month passes its shared one
-        snap = _snap.where(
-            (F.col("month") >= F.lit(_shift_month(lo, -2)))
-            & (F.col("month") < F.lit(_shift_month(hi, 3)))
-        )
-    else:
-        arrears = S.stg_arrears_daily(
-            read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-                (F.col("as_of_date") >= F.lit(_shift_month(lo, -2)))
-                & (F.col("as_of_date") < F.lit(_shift_month(hi, 3)))
-            )
-        )
-        snap = M.int_month_end_snapshot(arrears)
-    loans = _loans if _loans is not None else S.stg_loan_contract(
-        read_oltp_table(spark, src_dir, "loan_contract")
-    )
-
-    from credit_abs_oltp_to_mart_spark.functions.dates import (
-        months_on_book,
-        quarter_start,
-    )
-
-    base = (
-        snap.join(
-            F.broadcast(loans.select("loan_id", "origination_date")),
-            "loan_id",
-            "inner",
-        )
-        .select(
-            quarter_start("origination_date").alias("cohort_q"),
-            months_on_book(F.col("month"), F.col("origination_date")).alias(
-                "mob"
-            ),
-            "month",
-            (F.col("days_past_due") > 0).cast("int").alias("delinquent_flag"),
-            (F.col("days_past_due") > 90).cast("int").alias("npl_flag"),
-        )
-        .where(F.col("mob") >= 0)
-    )
-    keys = (
-        base.where(F.col("month").isin([m.replace(day=1) for m in months]))
-        .select("cohort_q", "mob")
-        .distinct()
-    )
-    agg = (
-        base.join(F.broadcast(keys), ["cohort_q", "mob"], "left_semi")
-        .groupBy("cohort_q", "mob")
-        .agg(
-            F.count(F.lit(1)).alias("loans_cnt"),
-            F.sum("delinquent_flag").alias("delinquent_cnt"),
-            F.sum("npl_flag").alias("npl_cnt"),
-        )
-    )
-    cells = agg.select(
-        "cohort_q",
-        "mob",
-        "loans_cnt",
-        "delinquent_cnt",
-        "npl_cnt",
-        (
-            F.col("delinquent_cnt").cast("double")
-            / F.nullif(F.col("loans_cnt"), F.lit(0)).cast("double")
-        ).alias("delinquent_rate"),
-        (
-            F.col("npl_cnt").cast("double")
-            / F.nullif(F.col("loans_cnt"), F.lit(0)).cast("double")
-        ).alias("npl_rate"),
-    )
-
-    cols = cells.columns
-    dtypes = dict(cells.dtypes)
-    existing = (
-        spark.read.parquet(f"{out_dir.rstrip('/')}/fct_vintage_mob.parquet")
-        .select(*[F.col(c).cast(dtypes[c]).alias(c) for c in cols])
-        .join(F.broadcast(keys.select("cohort_q").distinct()),
-              "cohort_q", "left_semi")
-        .join(F.broadcast(keys), ["cohort_q", "mob"], "left_anti")
+    """``fresh`` plus the written cells of the partitions it rewrites
+    that ``months`` do not own."""
+    spec = MARTS[name]
+    written = (
+        spark.read.parquet(f"{out_dir.rstrip('/')}/{name}.parquet")
+        .select(*[F.col(c).cast(t).alias(c) for c, t in fresh.dtypes])
+        .join(F.broadcast(fresh.select(spec.key).distinct()), spec.key,
+              "left_semi")
+        .where(~spec.owned(months))
     )
     # localCheckpoint severs lineage: the merged frame is about to
-    # OVERWRITE cohort directories it was just read from
-    merged = existing.unionByName(cells.select(*cols)).localCheckpoint()
-    _dynamic_overwrite(spark, merged, out_dir, "fct_vintage_mob", ["cohort_q"])
-    return cells
+    # OVERWRITE partitions it was just read from
+    return written.unionByName(fresh).localCheckpoint()
+
+
+def _refresh(
+    spark: SparkSession, src_dir: str, out_dir: str, months: list[dt.date],
+    *names: str,
+) -> dict[str, DataFrame]:
+    """Recompute the marts ``names`` for ``months`` and overwrite exactly
+    the partitions those months own. Returns each mart's refreshed rows."""
+    months = sorted({m.replace(day=1) for m in months})
+    staged = _stage(spark, src_dir, months, names)
+    frames = build_marts(staged)
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(mode, "static")
+    spark.conf.set(mode, "dynamic")
+    out = {}
+    try:
+        for name in names:
+            out[name] = frames[name].where(MARTS[name].owned(months))
+            rows = out[name]
+            if MARTS[name].merge:
+                rows = _merge_written(spark, rows, out_dir, name, months)
+            write_mart(rows, out_dir, name)
+    finally:
+        spark.conf.set(mode, prev)
+        release(frames)
+        for name in _CACHED:
+            staged[name].unpersist()
+    return out
 
 
 def refresh_month(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    months: list[dt.date],
-    lookback_months: int = 1,
+    spark: SparkSession, src_dir: str, out_dir: str, months: list[dt.date]
 ) -> dict[str, DataFrame]:
-    """The nightly entrypoint: refresh ``months`` across ALL 7 marts —
-    the incremental analogue of ``run_pipeline`` (which is the dbt
-    full-refresh analogue). Returns each mart's refreshed slice.
+    """The nightly entrypoint: refresh ``months`` across ALL 7 marts — the
+    incremental analogue of ``run_pipeline`` (the dbt full-refresh
+    analogue). Returns each mart's refreshed rows."""
+    return _refresh(spark, src_dir, out_dir, months, *MARTS)
 
-    Shares the dominant-table work across the refreshers the way
-    ``build_marts`` shares its intermediates: ONE windowed arrears scan
-    (cached) instead of five, ONE month-end snapshot feeding roll +
-    cure + vintage, ONE transitions lag feeding roll + cure. The window
-    is [lo - max(lookback, 2), hi + 2] months — the union of every
-    refresher's need; a wider-than-asked lookback only brings the lag
-    closer to full-rebuild semantics (more observed history, never
-    less)."""
-    lo = min(months).replace(day=1)
-    hi = max(months).replace(day=1)
-    back = max(lookback_months, 2)
-    arrears_w = S.stg_arrears_daily(
-        read_oltp_table(spark, src_dir, "arrears_dpd_status").where(
-            (F.col("as_of_date") >= F.lit(_shift_month(lo, -back)))
-            & (F.col("as_of_date") < F.lit(_shift_month(hi, 3)))
-        )
-    ).cache()
-    loans = S.stg_loan_contract(
-        read_oltp_table(spark, src_dir, "loan_contract")
-    )
-    arrears_m = arrears_w.where(_month_filter("as_of_date", months))
-    snap = M.int_month_end_snapshot(arrears_w).cache()
-    transitions = M.int_bucket_transitions(snap)
-    try:
-        return {
-            "fct_dpd_daily": refresh_dpd_daily(
-                spark, src_dir, out_dir, months,
-                _arrears=arrears_m, _loans=loans,
-            ),
-            "fct_npl_monthly": refresh_npl_monthly(
-                spark, src_dir, out_dir, months,
-                _arrears=arrears_m, _loans=loans,
-            ),
-            "fct_roll_rate_monthly": refresh_roll_rate_monthly(
-                spark, src_dir, out_dir, months,
-                lookback_months=lookback_months, _transitions=transitions,
-            ),
-            "fct_cure_rate_monthly": refresh_cure_rate_monthly(
-                spark, src_dir, out_dir, months,
-                lookback_months=lookback_months, _transitions=transitions,
-            ),
-            "fct_vintage_mob": refresh_vintage_mob(
-                spark, src_dir, out_dir, months, _snap=snap, _loans=loans,
-            ),
-            "fct_collections_monthly": refresh_collections_monthly(
-                spark, src_dir, out_dir, months, _loans=loans,
-            ),
-            "fct_writeoff_recovery_monthly": (
-                refresh_writeoff_recovery_monthly(
-                    spark, src_dir, out_dir, months
-                )
-            ),
-        }
-    finally:
-        arrears_w.unpersist()
-        snap.unpersist()
+
+# one mart at a time, through the same path
+def refresh_dpd_daily(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_dpd_daily")["fct_dpd_daily"]
+
+
+def refresh_npl_monthly(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_npl_monthly")["fct_npl_monthly"]
+
+
+def refresh_roll_rate_monthly(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_roll_rate_monthly")[
+        "fct_roll_rate_monthly"]
+
+
+def refresh_cure_rate_monthly(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_cure_rate_monthly")[
+        "fct_cure_rate_monthly"]
+
+
+def refresh_vintage_mob(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_vintage_mob")["fct_vintage_mob"]
+
+
+def refresh_collections_monthly(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_collections_monthly")[
+        "fct_collections_monthly"]
+
+
+def refresh_writeoff_recovery_monthly(spark, src_dir, out_dir, months) -> DataFrame:
+    return _refresh(spark, src_dir, out_dir, months, "fct_writeoff_recovery_monthly")[
+        "fct_writeoff_recovery_monthly"]

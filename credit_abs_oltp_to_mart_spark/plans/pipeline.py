@@ -1,15 +1,17 @@
 """The dbt model DAG as explicit composition (reference E2, SURVEY.md §3).
 
 dbt topologically orders stg_* -> fct_dpd_daily -> fct_npl_monthly (the other
-fct_* depend only on stg_*); here the order is plain Python data flow.
+fct_* depend only on stg_*); here the order is that of the mart table
+``operators.marts.MARTS``, which names each mart's build function and inputs.
 Catalyst replaces the Postgres planner end-to-end.
 
-``build_marts`` caches the two reused intermediates:
+``build_marts`` caches the two reused intermediates (``SHARED``):
 - the month-end snapshot (consumed by roll-rate, cure-rate AND vintage — the
   reference recomputes it 3x);
 - the bucket transitions (consumed by roll-rate AND cure-rate).
-At 100 TB, swap ``.cache()`` for a persisted intermediate table; the
-function composition is unchanged.
+``run_pipeline`` unpersists them once its writes are done, so a long-lived
+session keeps no cached data from a build. At 100 TB, swap ``.cache()``
+for a persisted intermediate table; the function composition is unchanged.
 """
 
 from __future__ import annotations
@@ -34,34 +36,28 @@ def build_staging(sources: dict[str, DataFrame]) -> dict[str, DataFrame]:
     }
 
 
-def build_marts(
-    staging: dict[str, DataFrame], cache_intermediates: bool = True
-) -> dict[str, DataFrame]:
-    """All 7 fact models from the staging layer."""
-    loan = staging["stg_loan_contract"]
-    arrears = staging["stg_arrears_daily"]
+SHARED = ("int_month_end_snapshot", "int_bucket_transitions")
 
-    dpd_daily = M.fct_dpd_daily(arrears, loan)
-    month_end = M.int_month_end_snapshot(arrears)
-    if cache_intermediates:
-        month_end = month_end.cache()
-    transitions = M.int_bucket_transitions(month_end)
-    if cache_intermediates:
-        transitions = transitions.cache()
 
-    return {
-        "fct_dpd_daily": dpd_daily,
-        "fct_npl_monthly": M.fct_npl_monthly(dpd_daily),
-        "fct_roll_rate_monthly": M.fct_roll_rate_monthly(transitions),
-        "fct_cure_rate_monthly": M.fct_cure_rate_monthly(transitions),
-        "fct_vintage_mob": M.fct_vintage_mob(month_end, loan),
-        "fct_collections_monthly": M.fct_collections_monthly(
-            staging["stg_payments"], loan
-        ),
-        "fct_writeoff_recovery_monthly": M.fct_writeoff_recovery_monthly(
-            staging["stg_writeoff_recovery"]
-        ),
+def build_marts(staging: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """All 7 fact models from the staging layer, one per ``M.MARTS`` entry,
+    followed by the intermediates they share (``SHARED``). Those are
+    cached lazily; ``release`` unpersists them."""
+    month_end = M.int_month_end_snapshot(staging["stg_arrears_daily"]).cache()
+    frames = {
+        **staging,
+        "int_month_end_snapshot": month_end,
+        "int_bucket_transitions": M.int_bucket_transitions(month_end).cache(),
     }
+    for name, spec in M.MARTS.items():
+        frames[name] = spec.build(*(frames[i] for i in spec.inputs))
+    return {name: frames[name] for name in (*M.MARTS, *SHARED)}
+
+
+def release(frames: dict[str, DataFrame]) -> None:
+    """Unpersist the intermediates ``build_marts`` cached, dependents first."""
+    for name in reversed(SHARED):
+        frames[name].unpersist()
 
 
 def run_pipeline(
@@ -76,7 +72,9 @@ def run_pipeline(
     (dbt/credit_mart/models/). Pass a dict as ``collect_metrics`` to
     receive per-mart in-flight quality metrics (row counts, key nulls) —
     ``df.observe`` accumulates them DURING the write, so monitoring costs
-    zero extra passes over 100 TB."""
+    zero extra passes over 100 TB. With ``out_dir`` the shared
+    intermediates are released after the writes; without, they stay cached
+    for the caller."""
     staging = build_staging(read_sources(spark, src_dir))
     mart_dfs = build_marts(staging)
     if out_dir:
@@ -84,20 +82,24 @@ def run_pipeline(
         from pyspark.sql import functions as F
 
         observations: dict[str, Observation] = {}
-        for name, df in mart_dfs.items():
-            if collect_metrics is not None:
-                obs = Observation(name)
-                first_col = df.columns[0]
-                df = df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.coalesce(
-                        F.sum(F.col(first_col).isNull().cast("int")),
-                        F.lit(0),
-                    ).alias("first_col_nulls"),
-                )
-                observations[name] = obs
-            write_mart(df, out_dir, name)
+        try:
+            for name in M.MARTS:
+                df = mart_dfs[name]
+                if collect_metrics is not None:
+                    obs = Observation(name)
+                    first_col = df.columns[0]
+                    df = df.observe(
+                        obs,
+                        F.count(F.lit(1)).alias("n_rows"),
+                        F.coalesce(
+                            F.sum(F.col(first_col).isNull().cast("int")),
+                            F.lit(0),
+                        ).alias("first_col_nulls"),
+                    )
+                    observations[name] = obs
+                write_mart(df, out_dir, name)
+        finally:
+            release(mart_dfs)
         for name, obs in observations.items():
             collect_metrics[name] = dict(obs.get)
     return {**staging, **mart_dfs}

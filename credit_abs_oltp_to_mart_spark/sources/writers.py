@@ -3,8 +3,9 @@
 The reference materializes every dbt model as a table in ``credit_mart`` and
 loads OLTP rows with paged ``execute_values`` INSERTs
 (pg_oltp_synth.py:118-139). Spark-side: ``df.write.parquet`` (Spark batches
-and parallelizes natively); monthly marts are partitioned by ``month`` so
-downstream reads partition-prune — the 100 TB analogue of an index on the
+and parallelizes natively); each mart is partitioned by the key its
+``operators.marts.MARTS`` entry declares (``month`` for the monthly marts)
+so downstream reads partition-prune — the 100 TB analogue of an index on the
 month column.
 
 Idempotent natural-key upsert (S7, the reference's ``ON CONFLICT (loan_id,
@@ -19,17 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# marts whose grain includes a month column -> partition column
-_MART_PARTITION_KEYS = {
-    "fct_npl_monthly": ["month"],
-    "fct_roll_rate_monthly": ["month"],
-    "fct_cure_rate_monthly": ["month"],
-    "fct_collections_monthly": ["month"],
-    "fct_writeoff_recovery_monthly": ["month"],
-    "fct_vintage_mob": ["cohort_q"],
-    # dominant loan x day fact: partitioned by derived month (see write_mart)
-    "fct_dpd_daily": ["as_of_month"],
-}
+from credit_abs_oltp_to_mart_spark.operators.marts import MARTS
+
 _NATURAL_KEYS = {
     "arrears_dpd_status": ["loan_id", "as_of_date"],  # pg_oltp_synth.py:791
 }
@@ -42,16 +34,13 @@ def write_mart(
     mode: str = "overwrite",
     file_format: str = "parquet",
 ) -> None:
-    """Materialize one model (S3), partitioned when the grain allows."""
-    if name == "fct_dpd_daily":
-        # the dominant loan x day fact: derive a month partition key so
-        # time-bounded reads prune directories (and DPP fires on joins)
-        df = df.withColumn("as_of_month", F.trunc("as_of_date", "month"))
-    writer = df.write.mode(mode)
-    keys = _MART_PARTITION_KEYS.get(name)
-    if keys:
-        writer = writer.partitionBy(*keys)
-    writer.format(file_format).save(
+    """Materialize one model (S3); a mart is partitioned by its ``MARTS``
+    key, derived when the mart lacks it (``fct_dpd_daily``'s
+    ``as_of_month``, so time-bounded reads prune directories and DPP fires
+    on joins)."""
+    spec = MARTS.get(name)
+    writer = df.write if spec is None else spec.keyed(df).write.partitionBy(spec.key)
+    writer.mode(mode).format(file_format).save(
         f"{out_dir.rstrip('/')}/{name}.{file_format}"
     )
 
@@ -71,27 +60,6 @@ def write_oltp_tables(
         df.write.mode(mode).format(file_format).save(
             f"{out_dir.rstrip('/')}/{name}.{file_format}"
         )
-
-
-def write_jdbc(
-    df: DataFrame,
-    jdbc_url: str,
-    table: str,
-    mode: str = "append",
-    batchsize: int = 5000,
-    num_partitions: int | None = None,
-    properties: dict[str, str] | None = None,
-) -> None:
-    """True-Postgres sink mode — the reference's actual write path
-    (paged ``execute_values`` INSERTs, 1000-5000 rows/statement,
-    pg_oltp_synth.py:118-139). Spark's JDBC writer batches per executor
-    (``batchsize`` mirrors the reference's page size) and writes all
-    partitions in parallel; ``num_partitions`` caps the connection count
-    so a 1000-executor job doesn't open 1000 sessions against one
-    Postgres."""
-    props = {"batchsize": str(batchsize), **(properties or {})}
-    out = df.repartition(num_partitions) if num_partitions else df
-    out.write.mode(mode).jdbc(jdbc_url, table, properties=props)
 
 
 def write_bucketed(

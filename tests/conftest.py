@@ -6,6 +6,7 @@ to a tmp dir once and read back by tests — the same flow a user runs.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from datetime import date
 
 import pytest
@@ -22,6 +23,16 @@ TEST_CFG = OLTPSynthConfig(
     start_date_max=date(2025, 12, 31),  # pin so tests don't move with the clock
     seed=42,
 )
+# the benchmark's lake shape at half its volume: a year of originations
+# with terms of up to a year, so its last six months each carry a full book
+# of loans (and, for seeds 7 and 101, a write-off)
+BAND_CFG = replace(
+    TEST_CFG,
+    start_date_min=date(2025, 7, 1),
+    start_date_max=date(2026, 6, 30),
+    max_term_months=12,
+)
+BAND_MONTHS = [date(2026, m, 1) for m in range(1, 7)]
 
 
 @pytest.fixture(scope="session")
@@ -56,3 +67,18 @@ def staging(oltp):
 @pytest.fixture(scope="session")
 def marts(staging):
     return build_marts(staging)
+
+
+@pytest.fixture(scope="session")
+def band_lake(spark, tmp_path_factory):
+    """``band_lake(seed)``: the ``BAND_CFG`` lake for ``seed``, generated on
+    first use."""
+    made: dict[int, str] = {}
+
+    def lake(seed: int) -> str:
+        if seed not in made:
+            made[seed] = str(tmp_path_factory.mktemp(f"band_lake_{seed}"))
+            run_credit_oltp_synth(spark, replace(BAND_CFG, seed=seed), out_dir=made[seed])
+        return made[seed]
+
+    return lake

@@ -13,8 +13,11 @@ import os
 
 from pyspark.sql import functions as F
 
+from credit_abs_oltp_to_mart_spark.operators.marts import MARTS
 from credit_abs_oltp_to_mart_spark.plans import incremental
+from credit_abs_oltp_to_mart_spark.plans.pipeline import run_pipeline
 from credit_abs_oltp_to_mart_spark.sources.writers import write_mart
+from tests.conftest import BAND_MONTHS
 
 
 def _files(path: str) -> set[str]:
@@ -112,32 +115,37 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.slow
-def test_refresh_month_all_marts_equal_full_build(
-    spark, oltp_dir, marts, tmp_path
-):
-    """The nightly entrypoint: refresh ONE mid-stream month across all 7
-    marts in place on a full build, and every mart must still row-equal
-    the full build (refresh == rebuild for the refreshed slice, identity
-    for the rest) — including fct_vintage_mob, whose quarter cohorts mix
-    three snapshot months per (cohort_q, mob) cell (the +-2-month window
-    + key-merge path)."""
-    out = str(tmp_path / "marts")
-    for name, df in marts.items():
-        write_mart(df, out, name)
-    target = _pick_mid_month(marts["fct_npl_monthly"])
+@pytest.mark.parametrize("seed", [7, 101])
+def test_refresh_every_band_month_equals_full_build(spark, band_lake, tmp_path, seed):
+    """The nightly entrypoint, month after month: refresh each band month
+    across all 7 marts in place on a full build, and every mart must still
+    row-equal the full build (refresh == rebuild for the refreshed slice,
+    identity for the rest) — including fct_vintage_mob, whose quarter
+    cohorts mix snapshot months M-3 .. M+3 in the cells month M feeds."""
+    lake, out = band_lake(seed), str(tmp_path / "marts")
+    full = run_pipeline(spark, lake, out_dir=out)
+    want = {name: _rows(full[name]) for name in MARTS}
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
 
-    refreshed = incremental.refresh_month(spark, oltp_dir, out, [target])
-    assert set(refreshed) == set(marts)
-    # the refresh actually recomputed something for the target month
-    # (an all-no-op refresh would pass the equality below vacuously)
-    for name in ("fct_dpd_daily", "fct_npl_monthly",
-                 "fct_roll_rate_monthly", "fct_vintage_mob"):
-        assert refreshed[name].count() > 0, name
-
-    for name, full in marts.items():
-        got = _read_mart_as(spark, f"{out}/{name}.parquet", full)
-        assert _rows(got) == _rows(full), name
+    for month in BAND_MONTHS:
+        before = _files(out)
+        refreshed = incremental.refresh_month(spark, lake, out, [month])
+        assert set(refreshed) == set(MARTS)
+        assert cache.numCachedEntries() == entries, month  # staged inputs released
+        # the refresh actually recomputed rows for the month (an all-no-op
+        # refresh would pass the equality below vacuously): a partition
+        # gets new files only when it has rows
+        rewritten = {os.path.relpath(os.path.dirname(p), out)
+                     for p in _files(out) - before}
+        for part in (f"fct_dpd_daily.parquet/as_of_month={month}",
+                     f"fct_npl_monthly.parquet/month={month}",
+                     f"fct_roll_rate_monthly.parquet/month={month}"):
+            assert part in rewritten, (part, rewritten)
+        assert any(d.startswith("fct_vintage_mob.parquet/") for d in rewritten)
+        for name in MARTS:
+            got = _read_mart_as(spark, f"{out}/{name}.parquet", full[name])
+            assert _rows(got) == want[name], (name, month)
 
 
 def test_refresh_vintage_untouched_cohort_files_not_rewritten(
@@ -168,12 +176,12 @@ def test_refresh_vintage_untouched_cohort_files_not_rewritten(
 
 
 def test_refresh_vintage_cell_mixing_is_real(spark, staging):
-    """Guard the premise the +-2-month window exists for: at least one
-    (cohort_q, mob) cell in this dataset aggregates snapshots from
-    DIFFERENT calendar months (quarter cohorts mix three origination
-    months). If the generator ever made cohorts month-grained, the naive
-    month-only vintage refresh would become valid and this test flags
-    the refresh design for simplification."""
+    """Guard the premise the vintage key merge and its +-3-month window
+    exist for: at least one (cohort_q, mob) cell in this dataset
+    aggregates snapshots from DIFFERENT calendar months (quarter cohorts
+    mix three origination months). If the generator ever made cohorts
+    month-grained, the naive month-only vintage refresh would become valid
+    and this test flags the refresh design for simplification."""
     from credit_abs_oltp_to_mart_spark.functions.dates import (
         months_on_book,
         quarter_start,

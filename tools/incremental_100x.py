@@ -14,8 +14,8 @@ prices, min-of-2 each:
   * ``incremental``   — ``refresh_month``: ONE month (the latest)
     refreshed across ALL 7 marts in place via dynamic partition
     overwrite — the real nightly shape, including the vintage
-    key-merge path (quarter cohorts mix three snapshot months per
-    cell, so vintage refreshes through a +-2-month window).
+    key-merge path (a quarter cohort's (cohort_q, mob) cell draws four
+    snapshot months, so vintage refreshes through a +-3-month window).
 
 Correctness assert (the roll-rate lookback): the refreshed roll-rate
 month slice must row-equal the full build's slice — month M's
