@@ -30,12 +30,12 @@ from credit_abs_oltp_to_mart_spark.generator.rand import (
 )
 from credit_abs_oltp_to_mart_spark.schemas import (
     CURRENCIES,
+    MONEY,
     PRODUCT_TYPES,
+    RATE,
     REPAYMENT_METHODS,
+    conform,
 )
-
-_MONEY = "decimal(18,2)"
-_RATE = "decimal(10,6)"
 
 _DAY_COUNTS = ["ACT/365", "ACT/360", "30/360"]  # pg_oltp_synth.py:230
 _PAY_FREQS = ["monthly", "weekly"]  # pg_oltp_synth.py:232
@@ -46,11 +46,11 @@ _CREDITOR_ID = "DE98ZZZ00000000000"  # :511
 
 
 def _money(c: F.Column) -> F.Column:
-    return F.round(c, 2).cast(_MONEY)
+    return F.round(c, 2).cast(MONEY)
 
 
 def _rate(c: F.Column) -> F.Column:
-    return F.round(c, 6).cast(_RATE)
+    return F.round(c, 6).cast(RATE)
 
 
 def _date_between(seed: int, salt: str, lo, hi, *keys) -> F.Column:
@@ -105,14 +105,6 @@ def gen_borrowers(spark: SparkSession, cfg: OLTPSynthConfig) -> DataFrame:
     the floored sequence (:99-115, :200-209); other columns stay NULL."""
     return spark.range(cfg.n_borrowers).select(
         (F.col("id") + cfg.min_borrower_id).alias("borrower_id"),
-        F.lit(None).cast("string").alias("full_name"),
-        F.lit(None).cast("date").alias("date_of_birth"),
-        F.lit(None).cast("string").alias("national_id_masked"),
-        F.lit(None).cast("string").alias("email"),
-        F.lit(None).cast("string").alias("phone"),
-        F.lit(None).cast("string").alias("address_line"),
-        F.lit(None).cast("string").alias("city"),
-        F.lit(None).cast("string").alias("country_code"),
         F.current_timestamp().alias("created_at"),
     )
 
@@ -123,16 +115,9 @@ def gen_applications(spark: SparkSession, cfg: OLTPSynthConfig) -> DataFrame:
     lo = F.lit(cfg.start_date_min).cast("date")
     return spark.range(cfg.n_applications).select(
         (F.col("id") + cfg.min_application_id).alias("application_id"),
-        F.lit(None).cast("long").alias("borrower_id"),
         _date_between(s, "app.date", lo, _end_date(cfg), F.col("id")).alias(
             "application_date"
         ),
-        F.lit(None).cast(_MONEY).alias("requested_amount"),
-        F.lit(None).cast("int").alias("requested_term_months"),
-        F.lit(None).cast("string").alias("product_type"),
-        F.lit(None).cast("string").alias("channel"),
-        F.lit(None).cast("string").alias("status"),
-        F.lit(None).cast("date").alias("decision_date"),
         F.current_timestamp().alias("created_at"),
     )
 
@@ -420,7 +405,6 @@ def gen_direct_debit_mandate(sim_attrs: DataFrame, cfg: OLTPSynthConfig) -> Data
         F.lit("RCUR").alias("sequence_type"),
         F.concat(F.lit("Debtor "), F.col("borrower_id")).alias("debtor_name"),
         F.lit(_IBAN_MASK).alias("debtor_iban_masked"),
-        F.lit(None).cast("string").alias("debtor_bic"),
         F.lit(_CREDITOR_ID).alias("creditor_id"),
         F.lit("Demo Bank").alias("creditor_name"),
         randint(s, "dd.day", 1, 28, k).alias("requested_collection_day"),
@@ -518,10 +502,7 @@ def gen_repayment_payment(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFrame:
             F.lit("EXT-"), k, F.lit("-"), inst, F.lit("-"),
             randint(s, "pay.extref", 100000, 999999, k, inst),
         ).alias("external_reference"),
-        F.lit(None).cast("string").alias("bank_statement_entry_id"),
         F.lit("received").alias("status"),
-        F.lit(None).cast("string").alias("return_reason_code"),
-        F.lit(None).cast("string").alias("reversal_reference"),
     )
 
 
@@ -554,7 +535,9 @@ def gen_arrears_dpd_status(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFrame:
 
     (loan_id, as_of_date) collisions across installment windows keep the
     FIRST installment's row, matching Postgres ON CONFLICT DO NOTHING with
-    insertion in installment order (:791).
+    insertion in installment order (:791). This window is the idempotent
+    natural-key upsert (S7), so the writer does not deduplicate; the
+    ``arrears.natural_key_unique`` audit checks the key on every build.
     """
     if not cfg.build_daily_snapshots:
         return sim.sparkSession.createDataFrame([], schema="loan_id long")
@@ -612,30 +595,14 @@ def gen_arrears_dpd_status(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFrame:
         ),
         (dpd > 90).alias("nonperforming_flag"),
         F.lit(False).alias("probation_flag"),
-        F.lit(None).cast("date").alias("cure_date"),
     )
 
     w = Window.partitionBy("loan_id", "as_of_date").orderBy("installment_no")
     return (
         rows.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select(
-            F.xxhash64("loan_id", "as_of_date").alias("arrears_id"),
-            "loan_id",
-            "as_of_date",
-            "days_past_due",
-            "past_due_amount_total",
-            "past_due_principal",
-            "past_due_interest",
-            "past_due_fees",
-            "oldest_unpaid_due_date",
-            "arrears_bucket",
-            "early_arrears_flag",
-            "default_flag",
-            "nonperforming_flag",
-            "probation_flag",
-            "cure_date",
-        )
+        .withColumn("arrears_id", F.xxhash64("loan_id", "as_of_date"))
+        .drop("_rn", "installment_no")
     )
 
 
@@ -647,10 +614,7 @@ def gen_fees_and_charges(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFrame:
         F.col("pay_date").alias("due_date"),
         "currency",
         _money(F.col("late_fee")).alias("amount"),
-        F.lit(None).cast(_MONEY).alias("tax_amount"),
         F.lit("assessed").alias("status"),
-        F.lit(None).cast("long").alias("related_payment_id"),
-        F.lit(None).cast("string").alias("waiver_reason_code"),
     )
 
 
@@ -663,17 +627,16 @@ def gen_penalty_interest_events(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFra
         "currency",
         _money(F.col("penalty")).alias("penalty_amount_accrued"),
         F.lit(False).alias("posted_flag"),
-        F.lit(None).cast("timestamp").alias("posted_at"),
     )
 
 
 def gen_collection_instructions(sim: DataFrame, cfg: OLTPSynthConfig) -> DataFrame:
     """Instructions are appended BEFORE the skip-check (:568-583), so they
-    exist for skipped-payment installments too — but not past the break."""
+    exist for skipped-payment installments too — but not past the break.
+    ``schedule_id`` stays NULL: the reference does not fetch it (:571)."""
     k, inst = F.col("loan_id"), F.col("installment_no")
     return sim.where(F.col("kept") & F.col("has_mandate")).select(
         "loan_id",
-        F.lit(None).cast("long").alias("schedule_id"),  # :571 (not fetched)
         F.col("loan_id").alias("mandate_id"),
         F.concat(F.lit("MSG-"), k, F.lit("-"), inst).alias("message_id"),
         F.concat(F.lit("PINF-"), k, F.lit("-"), inst).alias("payment_info_id"),
@@ -749,8 +712,6 @@ def gen_collections_case(sim_attrs: DataFrame, cfg: OLTPSynthConfig) -> DataFram
         choice(
             s, "case.outcome", ["promise_to_pay", "no_contact", "legal_notice"], k
         ).alias("outcome_code"),
-        F.lit(None).cast("date").alias("closed_date"),
-        F.lit(None).cast("string").alias("close_reason"),
     )
 
 
@@ -760,7 +721,7 @@ def gen_write_off_and_recovery(cases: DataFrame, cfg: OLTPSynthConfig) -> DataFr
     return cases.where(bernoulli(s, "wo.pick", 0.35, k)).select(
         k.alias("writeoff_id"),
         "loan_id",
-        F.date_sub(F.current_date(), randint(s, "wo.age", 1, 180, k)).alias(
+        F.date_sub(_end_date(cfg), randint(s, "wo.age", 1, 180, k)).alias(
             "writeoff_date"
         ),
         _money(uniform(s, "wo.prin", 100.0, 2000.0, k)).alias(
@@ -770,9 +731,6 @@ def gen_write_off_and_recovery(cases: DataFrame, cfg: OLTPSynthConfig) -> DataFr
         _money(uniform(s, "wo.fees", 0.0, 200.0, k)).alias("writeoff_amount_fees"),
         bernoulli(s, "wo.expected", 0.5, k).alias("recovery_expected_flag"),
         F.col("case_id").alias("recovery_case_id"),
-        F.lit(None).cast("long").alias("recovery_payment_id"),
-        F.lit(None).cast(_MONEY).alias("recovery_amount"),
-        F.lit(None).cast("date").alias("recovery_date"),
     )
 
 
@@ -785,8 +743,6 @@ def gen_audit_log(sim: DataFrame, mandates: DataFrame, cfg: OLTPSynthConfig) -> 
         F.current_timestamp().alias("event_timestamp"),
         F.lit("system").alias("actor_id"),
         F.lit("synth").alias("source_system"),
-        F.lit(None).cast("string").alias("before_hash"),
-        F.lit(None).cast("string").alias("after_hash"),
         F.lit("direct debit mandate").alias("notes"),
     )
     inst_events = sim.where("paid").select(
@@ -796,8 +752,6 @@ def gen_audit_log(sim: DataFrame, mandates: DataFrame, cfg: OLTPSynthConfig) -> 
         F.current_timestamp().alias("event_timestamp"),
         F.lit("system").alias("actor_id"),
         F.lit("synth").alias("source_system"),
-        F.lit(None).cast("string").alias("before_hash"),
-        F.lit(None).cast("string").alias("after_hash"),
         F.format_string(
             "inst=%s due=%s pay=%s late=%s",
             F.col("installment_no").cast("string"),
@@ -818,10 +772,13 @@ def run_credit_oltp_synth(
     cfg: OLTPSynthConfig | None = None,
     out_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Generate all 17 OLTP tables; optionally persist as a parquet lake.
+    """Generate all 17 OLTP tables, each ``conform``ed to its declared
+    schema; optionally persist as a parquet lake.
 
     The reference's per-phase commits become table writes; RETURNING-based id
-    capture becomes deterministic id columns (S6/S8, SURVEY.md §2.1).
+    capture becomes deterministic id columns (S6/S8, SURVEY.md §2.1). With
+    ``out_dir`` the generator's caches are released after the writes;
+    without, they stay cached for the caller.
     """
     cfg = cfg or OLTPSynthConfig()
 
@@ -832,7 +789,7 @@ def run_credit_oltp_synth(
     mandates = gen_direct_debit_mandate(sim_attrs, cfg)
     cases = gen_collections_case(sim_attrs, cfg)
 
-    tables: dict[str, DataFrame] = {
+    generated = {
         "borrower": gen_borrowers(spark, cfg),
         "application": gen_applications(spark, cfg),
         "loan_contract": loans.drop("_annual_rate", "_principal_raw"),
@@ -851,11 +808,16 @@ def run_credit_oltp_synth(
         "write_off_and_recovery": gen_write_off_and_recovery(cases, cfg),
         "audit_decision_and_ops_log": gen_audit_log(sim, mandates, cfg),
     }
+    tables = {name: conform(df, name) for name, df in generated.items()}
 
     if out_dir:
         from credit_abs_oltp_to_mart_spark.sources.writers import write_oltp_tables
 
-        write_oltp_tables(tables, out_dir)
+        try:
+            write_oltp_tables(tables, out_dir)
+        finally:
+            for cached in (sim, sim_attrs, loans):
+                cached.unpersist()
     return tables
 
 

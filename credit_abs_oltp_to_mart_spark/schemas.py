@@ -10,10 +10,15 @@ reconstructed from the generator INSERT lists
 Type mapping (SURVEY.md §1.2): bigint→Long, int→Integer,
 numeric(money)→Decimal(18,2), numeric(rate)→Decimal(10,6), date→Date,
 timestamp→Timestamp, boolean→Boolean, text→String.
+
+These StructTypes are the only description of the 17 tables: the generator
+``conform``s every table it writes to them, and the readers read with them.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MONEY = T.DecimalType(18, 2)
@@ -289,7 +294,7 @@ FORBEARANCE_RESTRUCTURE_EVENT = _s([
 
 AUDIT_DECISION_AND_OPS_LOG = _s([
     ("entity_type", T.StringType(), True),
-    ("entity_id", T.LongType(), True),
+    ("entity_id", T.StringType(), True),
     ("event_type", T.StringType(), True),
     ("event_timestamp", T.TimestampType(), True),
     ("actor_id", T.StringType(), True),
@@ -323,3 +328,20 @@ ALL_OLTP_TABLES = {
     "forbearance_restructure_event": FORBEARANCE_RESTRUCTURE_EVENT,
     "audit_decision_and_ops_log": AUDIT_DECISION_AND_OPS_LOG,
 }
+
+
+def conform(df: DataFrame, table: str) -> DataFrame:
+    """``df`` in ``table``'s declared shape: the declared columns in declared
+    order, each cast to its declared type, and a typed NULL for each
+    declared column ``df`` lacks (the columns the reference leaves empty).
+    A column the schema does not declare raises ``ValueError``."""
+    schema, have = ALL_OLTP_TABLES[table], df.columns
+    undeclared = [c for c in have if c not in schema.fieldNames()]
+    if undeclared:
+        raise ValueError(f"{table}: undeclared columns {undeclared}")
+    return df.select(*[
+        (F.col(f.name) if f.name in have else F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for f in schema.fields
+    ])

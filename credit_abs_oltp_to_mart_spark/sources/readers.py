@@ -1,10 +1,8 @@
 """Readers — the reference's dbt ``source()`` scans (S1) re-expressed.
 
-Default storage is a parquet lake (one directory per OLTP table). A JDBC
-mode mirrors the reference's actual Postgres deployment: dbt compiles
+Storage is a parquet lake (one directory per OLTP table); dbt compiles
 ``source('credit_oltp', t)`` to a scan of ``credit_oltp.t``
-(sources.yml:5-11); here that becomes ``spark.read.jdbc`` with predicate
-pushdown left to the JDBC source.
+(sources.yml:5-11), here a scan of ``<lake>/t.parquet``.
 
 Schemas are enforced explicitly (schemas.py) — fixed DDL, never inferred,
 matching the reference's Postgres DDL posture.
@@ -18,28 +16,21 @@ from credit_abs_oltp_to_mart_spark import schemas
 
 
 def read_oltp_table(
-    spark: SparkSession,
-    base_dir: str,
-    table: str,
-    jdbc_url: str | None = None,
-    jdbc_properties: dict[str, str] | None = None,
-    file_format: str = "parquet",
+    spark: SparkSession, base_dir: str, table: str, file_format: str = "parquet"
 ) -> DataFrame:
-    """Scan one OLTP table (S1). Parquet by default; JDBC when a url is given.
+    """Scan one table (S1); Catalyst pushes filters/pruning into the scan.
 
-    Parquet path: Catalyst pushes filters/pruning into the scan. JDBC path:
-    partitioned reads should pass ``partitionColumn=loan_id`` bounds via
-    ``jdbc_properties`` for parallelism on big tables. ``file_format`` may
-    be any registered columnar source ("parquet", "orc" — both ship with
-    Spark and both support predicate pushdown + column pruning); table
-    directories carry the format as their extension.
+    A table ``schemas.ALL_OLTP_TABLES`` declares is read with that schema,
+    so planning the read runs no Spark job; any other name (a mart, say)
+    is inferred from its files. ``file_format`` may be any registered
+    columnar source ("parquet", "orc" — both ship with Spark and both
+    support predicate pushdown + column pruning); table directories carry
+    the format as their extension.
     """
-    if jdbc_url is not None:
-        return spark.read.jdbc(
-            jdbc_url, f"credit_oltp.{table}", properties=jdbc_properties or {}
-        )
-    path = f"{base_dir.rstrip('/')}/{table}.{file_format}"
-    return spark.read.format(file_format).load(path)
+    reader = spark.read.format(file_format)
+    if table in schemas.ALL_OLTP_TABLES:
+        reader = reader.schema(schemas.ALL_OLTP_TABLES[table])
+    return reader.load(f"{base_dir.rstrip('/')}/{table}.{file_format}")
 
 
 def _landing_schema(table: str):

@@ -7,10 +7,6 @@ and parallelizes natively); each mart is partitioned by the key its
 ``operators.marts.MARTS`` entry declares (``month`` for the monthly marts)
 so downstream reads partition-prune — the 100 TB analogue of an index on the
 month column.
-
-Idempotent natural-key upsert (S7, the reference's ``ON CONFLICT (loan_id,
-as_of_date) DO NOTHING``, pg_oltp_synth.py:791) is ``dropDuplicates`` on the
-natural key before write.
 """
 
 from __future__ import annotations
@@ -22,42 +18,23 @@ from pyspark.sql import functions as F
 
 from credit_abs_oltp_to_mart_spark.operators.marts import MARTS
 
-_NATURAL_KEYS = {
-    "arrears_dpd_status": ["loan_id", "as_of_date"],  # pg_oltp_synth.py:791
-}
 
-
-def write_mart(
-    df: DataFrame,
-    out_dir: str,
-    name: str,
-    mode: str = "overwrite",
-    file_format: str = "parquet",
-) -> None:
+def write_mart(df: DataFrame, out_dir: str, name: str) -> None:
     """Materialize one model (S3); a mart is partitioned by its ``MARTS``
     key, derived when the mart lacks it (``fct_dpd_daily``'s
     ``as_of_month``, so time-bounded reads prune directories and DPP fires
     on joins)."""
     spec = MARTS.get(name)
     writer = df.write if spec is None else spec.keyed(df).write.partitionBy(spec.key)
-    writer.mode(mode).format(file_format).save(
-        f"{out_dir.rstrip('/')}/{name}.{file_format}"
-    )
+    writer.mode("overwrite").parquet(f"{out_dir.rstrip('/')}/{name}.parquet")
 
 
 def write_oltp_tables(
-    tables: dict[str, DataFrame],
-    out_dir: str,
-    mode: str = "overwrite",
-    file_format: str = "parquet",
+    tables: dict[str, DataFrame], out_dir: str, file_format: str = "parquet"
 ) -> None:
-    """Persist generated OLTP tables (S4). Natural-key dedup replaces the
-    reference's ON CONFLICT DO NOTHING (S7)."""
+    """Persist generated OLTP tables (S4)."""
     for name, df in tables.items():
-        key = _NATURAL_KEYS.get(name)
-        if key:
-            df = df.dropDuplicates(key)
-        df.write.mode(mode).format(file_format).save(
+        df.write.mode("overwrite").format(file_format).save(
             f"{out_dir.rstrip('/')}/{name}.{file_format}"
         )
 

@@ -3,6 +3,8 @@ pg_oltp_synth.py and README.MD:31-45)."""
 
 from __future__ import annotations
 
+from datetime import timedelta
+
 from pyspark.sql import functions as F
 
 from credit_abs_oltp_to_mart_spark.plans.checks import run_audit_checks, run_schema_tests
@@ -103,6 +105,16 @@ def test_arrears_zero_dpd_zero_amounts(oltp):
     assert a.where(
         (F.col("days_past_due") > 0) & (F.col("past_due_amount_total") <= 0)
     ).count() == 0
+
+
+def test_writeoff_dates_pinned_to_lake_end(oltp):
+    """writeoff_date is the lake's end minus 1-180 days, whatever day the
+    lake is generated on (pg_oltp_synth.py dates it from today; here
+    ``start_date_max`` is today)."""
+    end = TEST_CFG.start_date_max
+    dates = [r[0] for r in oltp["write_off_and_recovery"].select("writeoff_date").collect()]
+    assert dates
+    assert [d for d in dates if not end - timedelta(days=180) <= d <= end - timedelta(days=1)] == []
 
 
 def test_id_floors(oltp):

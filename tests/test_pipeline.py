@@ -1,17 +1,21 @@
 """The build's contract with its callers: the names creditbench traces by
 module attribute, the mart names ``run_pipeline`` writes under, and a
-build that leaves no cached data behind in a long-lived session."""
+generation and a build that leave no cached data behind in a long-lived
+session."""
 
 from __future__ import annotations
 
 import importlib
 import os
 import sys
+from dataclasses import replace
 
 import pytest
 
+from credit_abs_oltp_to_mart_spark.generator import run_credit_oltp_synth
 from credit_abs_oltp_to_mart_spark.operators.marts import MARTS
 from credit_abs_oltp_to_mart_spark.plans import incremental, pipeline
+from tests.conftest import BAND_CFG
 
 CREDITBENCH = os.path.join(os.path.dirname(os.path.dirname(__file__)), "creditbench")
 
@@ -45,13 +49,15 @@ def test_run_pipeline_writes_each_mart_by_name(spark, oltp_dir, tmp_path, worklo
     assert sorted(names) == sorted(workloads.MARTS)
 
 
-def test_run_pipeline_leaves_nothing_cached(spark, band_lake, tmp_path):
-    """Two builds in one session: each releases what it cached once its
-    writes are done, so the second never asks to cache data that is
-    already cached."""
-    lake = band_lake(7)  # generated first: the generator keeps its own caches
+def test_run_pipeline_leaves_nothing_cached(spark, tmp_path):
+    """Generation and two builds in one session: each releases what it
+    cached once its writes are done, so the second build never asks to
+    cache data that is already cached."""
     cache = spark._jsparkSession.sharedState().cacheManager()
+    entries = cache.numCachedEntries()
+    lake = str(tmp_path / "oltp")
+    run_credit_oltp_synth(spark, replace(BAND_CFG, seed=7), out_dir=lake)
+    assert cache.numCachedEntries() == entries, "generator"
     for i in range(2):
-        entries = cache.numCachedEntries()
         pipeline.run_pipeline(spark, lake, out_dir=str(tmp_path / f"marts{i}"))
         assert cache.numCachedEntries() == entries, i
